@@ -14,10 +14,12 @@ Spark's scheduler happily runs several jobs at once inside one
 application (optimization guide §2.6 "Overlap independent jobs"); the
 legs are independent subtrees, so constructing them from a small thread
 pool overlaps their training jobs and checkpoint materializations
-across the idle cores. This does NOT share state between legs — each
-leg still derives its own pipeline (the r11-measured rule: sharing a
+across the idle cores. Legs do NOT share per-query subtrees — each leg
+still derives its own pipeline (the r11-measured rule: sharing a
 cached subtree between legs serializes the execution critical path and
-loses; overlapping their *construction* has no such coupling).
+loses; overlapping their *construction* has no such coupling). The
+only state they share is intermediates.py's application-lived
+intermediates.
 
 Determinism: each leg's DataFrame is bit-identical however it is
 constructed (training samples are seed/cap-bounded and collected from
@@ -58,11 +60,10 @@ def parallel_legs(*thunks: Callable[[], Any]) -> list[Any]:
     once one leg fails, not-yet-started legs are cancelled rather than
     burning Spark jobs behind a doomed query (ADVICE r15).
 
-    Thunks MUST NOT share cold process-wide memos (_SEM_ASSIGN_MEMO &
-    co): call sites pre-warm any memo two legs would both miss (e.g.
-    _corpus_n) before fanning out — enforced by convention and by this
-    sentence (ADVICE r15; a lock here can't help, because the memo
-    modules are free to add new ones)."""
+    Legs may share cold intermediates (the corpus count, the semantic
+    cell assignment, the IVF store): intermediates.py holds one lock
+    per key while its producer runs, so the first leg to miss builds
+    it and the others wait for that result."""
     if len(thunks) <= 1:
         return [t() for t in thunks]
     with ThreadPoolExecutor(

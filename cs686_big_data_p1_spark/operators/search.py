@@ -648,7 +648,17 @@ def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bigint ops compute), and the DuckDB oracle replays the identical
     # trajectory, so the hash pins the rewrite (r16, guide §5 — the
     # collect is K-bounded, never corpus-bounded).
+    out_schema = T.StructType(
+        [
+            T.StructField("pick", T.IntegerType(), False),
+            cands.schema["doc_id"],
+            cands.schema["rel_e6"],
+            T.StructField("mmr_e6", T.LongType(), False),
+        ]
+    )
     rel = {r["doc_id"]: r["rel_e6"] for r in cands.collect()}
+    if not rel:  # no BM25 hit: nothing to diversify
+        return spark.createDataFrame([], out_schema)
     sim: dict = {}
     for r in sims.collect():
         sim.setdefault(r["da"], {})[r["db"]] = r["sim_e6"]
@@ -679,12 +689,4 @@ def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             continue
         picks.append((i, best[1], best[2], best[3]))
         sel.append(best[1])
-    out_schema = T.StructType(
-        [
-            T.StructField("pick", T.IntegerType(), False),
-            cands.schema["doc_id"],
-            cands.schema["rel_e6"],
-            T.StructField("mmr_e6", T.LongType(), False),
-        ]
-    )
     return spark.createDataFrame(picks, out_schema)

@@ -52,14 +52,6 @@ def track_cache(df: DataFrame, eager: bool = False) -> DataFrame:
     return df
 
 
-# Per-query scratch state beyond DataFrame caches (e.g. ann.py's
-# memoized corpus count, ADVICE r10): modules append zero-arg callables
-# here and clear_caches() invokes them, so scalar memos share exactly
-# the lifetime of the tracked caches — valid across the legs of one
-# composed query, never across queries or fixture rewrites.
-CLEAR_HOOKS: list[Callable[[], None]] = []
-
-
 def clear_caches() -> None:
     while TRACKED_CACHES:
         df = TRACKED_CACHES.pop()
@@ -67,8 +59,6 @@ def clear_caches() -> None:
             df.unpersist()
         except Exception:  # noqa: BLE001 — session may already be gone
             pass
-    for hook in CLEAR_HOOKS:
-        hook()
 
 
 def query(name: str, oracle: Optional[str] = None) -> Callable[[QueryFn], QueryFn]:
@@ -104,10 +94,12 @@ PRIORITY_ORDER = [
     # Round-16 picks: the five r15c newcomers with zero driver history
     # (range_search/SQ-reconstruct/binary/MRL), the optimizer-touched
     # never-checked trio (minhash_estimate_error, knn_graph,
-    # dedup_simhash_pairs), FIVE re-verify rows so the driver directly
+    # dedup_simhash_pairs), three re-verify rows so the driver directly
     # re-checks r15/r16 optimization edits (ann_recall_all,
-    # pq_recall_compare, pagerank_copurchase, triangle_count,
-    # allpairs_cosine — VERDICT r15 #9 names them), then never-checked
+    # pq_recall_compare, allpairs_cosine — VERDICT r15 #9 names them),
+    # r16's two semantic rewrites (mmr_rerank's driver-side greedy
+    # recurrence, stream_dedup_near's fresh-store fast path), then
+    # never-checked
     # sketch (cms_topk, reservoir_sample, weighted_sample_systematic,
     # bloom_prefilter, value_histogram), governance/quality
     # (l_diversity, referential_integrity, table_profile,
@@ -124,8 +116,8 @@ PRIORITY_ORDER = [
     "dedup_simhash_pairs",
     "ann_recall_all",
     "pq_recall_compare",
-    "pagerank_copurchase",
-    "triangle_count",
+    "mmr_rerank",
+    "stream_dedup_near",
     "allpairs_cosine",
     "cms_topk",
     "reservoir_sample",
@@ -141,8 +133,16 @@ PRIORITY_ORDER = [
     "stream_hb_session",
     "stream_replication_orders",
     # Post-window (judge self-checks these via the committed full-sweep
-    # artifacts); displaced former window occupants lead the list, in
-    # their prior order.
+    # artifacts). The §2.E-2.I representatives lead it (slots 51-69,
+    # pinned by tests/test_entry.py), then displaced former window
+    # occupants in their prior order.
+    "publish_upsert", "checksum_join", "list_storage_nodes", "placement_pick",
+    "round_robin_assign", "under_replicated", "failover_choice",
+    "queue_order", "corruption_scan", "replication_orders", "hb_tumbling",
+    "hb_sliding", "hb_session", "dedup_exact", "dedup_near", "knn_bruteforce",
+    "text_stats", "doc_embedding_join", "tpch_q1_pricing",
+    "pagerank_copurchase",
+    "triangle_count",
     "knn_ivf_sq",
     "ivf_release_versions",
     "stream_knn_store",
@@ -169,11 +169,6 @@ PRIORITY_ORDER = [
     "tpch_q10_returns",
     "tpch_q13_custdist",
     "tpch_q14_promo",
-    "publish_upsert", "checksum_join", "list_storage_nodes", "placement_pick",
-    "round_robin_assign", "under_replicated", "failover_choice",
-    "queue_order", "corruption_scan", "replication_orders", "hb_tumbling",
-    "hb_sliding", "hb_session", "dedup_exact", "dedup_near", "knn_bruteforce",
-    "text_stats", "doc_embedding_join", "tpch_q1_pricing",
     # r14's window occupants, displaced with driver-green history.
     "ivf_store_prune", "ivf_nprobe_sweep", "decontaminate_semantic",
     "stream_decontaminate", "decontaminate_report",
@@ -181,13 +176,13 @@ PRIORITY_ORDER = [
     "knn_ivfpq_residual", "ivf_retrain",
     "ivf_store_delete", "stream_decontaminate_semantic",
     "ivf_store_vacuum", "knn_ivf_store_live", "knn_ivfpq",
-    "kmeans_lloyd", "ann_recall", "dedup_incremental", "stream_dedup_near",
+    "kmeans_lloyd", "ann_recall", "dedup_incremental",
     "decontaminate", "dedup_clusters", "kmeans_cells", "tpch_q9_profit",
     "order_date_cube", "asof_join", "hll_distinct",
     "scd2_user_state", "knn_ivf_append",
     "ivf_imbalance", "stream_ivf_assign", "cluster_keep_best",
     "embedding_drift", "stream_embedding_drift", "embedding_covariance",
-    "retention_cohorts", "gram_power_topvec", "t_closeness", "mmr_rerank",
+    "retention_cohorts", "gram_power_topvec", "t_closeness",
     "dsir_sample", "substring_scrub", "knn_ivf_trained",
     "bpe_merges", "knn_pq_adc", "substring_dedup",
     "kll_quantiles", "stream_attribution_outer", "bfs_distances", "heavy_hitters", "dedup_semantic", "hybrid_search", "corpus_curate_semantic",

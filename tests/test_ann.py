@@ -576,32 +576,36 @@ def test_ann_recall_all_covers_every_method_with_floor(spark, registry):
 
 
 def test_corpus_count_memo_lifetime(spark):
-    """ADVICE r10: _corpus_n memoizes the embeddings count per sf_dir
-    so composed queries (ann_recall_all's five legs) stop re-counting
-    the corpus — but the memo must live exactly ONE query invocation:
-    registry.clear_caches(), which every driver fires after
-    materializing each query, must clear it, so a rewritten fixture
-    dir can never serve a stale count across queries."""
-    from cs686_big_data_p1_spark import registry
-    from cs686_big_data_p1_spark.operators.ann import _CORPUS_N, _corpus_n
+    """ADVICE r10: _corpus_n memoizes the embeddings count so composed
+    queries (ann_recall_all's five legs) stop re-counting the corpus.
+    It is a shared intermediate (intermediates.py), so it follows the
+    one rule every intermediate does: one entry per fixture, keyed by
+    (applicationId, name, sf_dir, fingerprints), living for the
+    application — registry.clear_caches() between queries does not
+    end it; a fixture rewrite does (next test)."""
+    from cs686_big_data_p1_spark import intermediates, registry
+    from cs686_big_data_p1_spark.operators.ann import _corpus_n
+    from cs686_big_data_p1_spark.tables import table_fingerprint
 
-    registry.clear_caches()
-    assert _CORPUS_N == {}
     n1 = _corpus_n(spark, SF_SMALL)
-    assert n1 > 0 and list(_CORPUS_N.values()) == [n1]
-    [key] = _CORPUS_N
-    assert key[0] == SF_SMALL
-    # second call within the same "query": served from the memo
-    assert _corpus_n(spark, SF_SMALL) == n1
-    assert len(_CORPUS_N) == 1
-    # driver-side clear ends the lifetime
+    assert n1 > 0
+    key, value = intermediates._ENTRIES[("corpus_n", SF_SMALL)]
+    assert key == (
+        spark.sparkContext.applicationId,
+        "corpus_n",
+        SF_SMALL,
+        (table_fingerprint(SF_SMALL, "embeddings"),),
+    )
+    assert value == n1
+    # the per-query driver clear leaves it in place
     registry.clear_caches()
-    assert _CORPUS_N == {}
+    assert intermediates._ENTRIES[("corpus_n", SF_SMALL)] == (key, n1)
+    assert _corpus_n(spark, SF_SMALL) == n1
 
 
 def test_corpus_count_memo_structural_staleness_guard(spark, tmp_path):
     """ADVICE r11: the memo's correctness must not rest on every
-    caller remembering clear_caches(). The key now carries a
+    caller remembering clear_caches(). The key carries a
     (size, mtime_ns) fingerprint of the embeddings parquet, so a
     REWRITTEN fixture dir yields the fresh count even when nobody
     cleared the memo between queries."""

@@ -423,6 +423,24 @@ def test_phrase_search_overlap_and_positions(spark, tmp_path):
 # ------------------------------- mmr_rerank ---------------------------------
 
 
+def _write_embeddings(tmp_path, embs):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array([e[0] for e in embs], pa.int64()),
+                "embedding": pa.array(
+                    [e[1] for e in embs], pa.list_(pa.float32())
+                ),
+                "label": pa.array([e[2] for e in embs], pa.int32()),
+            }
+        ),
+        str(tmp_path / "embeddings.parquet"),
+    )
+
+
 def test_mmr_rerank_diversifies_planted_neardup(spark, tmp_path):
     """Planted MMR trajectory: doc 1 is the SECOND-most-relevant
     candidate but a near-duplicate (cosine ~1) of the top pick, so
@@ -455,21 +473,7 @@ def test_mmr_rerank_diversifies_planted_neardup(spark, tmp_path):
     pd.DataFrame(
         docs, columns=["doc_id", "text", "lang", "source", "n_chars"]
     ).to_parquet(str(tmp_path / "documents.parquet"), index=False)
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    pq.write_table(
-        pa.table(
-            {
-                "vec_id": pa.array([e[0] for e in embs], pa.int64()),
-                "embedding": pa.array(
-                    [e[1] for e in embs], pa.list_(pa.float32())
-                ),
-                "label": pa.array([e[2] for e in embs], pa.int32()),
-            }
-        ),
-        str(tmp_path / "embeddings.parquet"),
-    )
+    _write_embeddings(tmp_path, embs)
 
     out = mmr_rerank(spark, str(tmp_path)).toPandas().sort_values("pick")
     assert list(out["pick"]) == list(range(1, MMR_K + 1))
@@ -481,3 +485,34 @@ def test_mmr_rerank_diversifies_planted_neardup(spark, tmp_path):
     # BM25 order would be [0,1,2,3,4]; MMR demoted the near-dup to last
     rels = out.sort_values("doc_id")["rel_e6"].tolist()
     assert rels == sorted(rels, reverse=True)
+
+
+def test_mmr_rerank_empty_candidate_set(spark, tmp_path):
+    """A corpus with no BM25 hit (no document contains a query term)
+    gives mmr_rerank zero candidates: it returns an empty frame with
+    its usual schema, as its DuckDB oracle does, instead of raising
+    on the greedy recurrence's first argmax."""
+    import duckdb
+
+    from cs686_big_data_p1_spark.operators.search import (
+        BM25_TERMS,
+        _mmr_oracle,
+        mmr_rerank,
+    )
+
+    texts = ["alpha beta", "gamma delta epsilon", "zeta"]
+    assert not any(t in x.split() for t in BM25_TERMS for x in texts)
+    sf_dir = _write_docs(tmp_path, texts)
+    _write_embeddings(
+        tmp_path, [(i, [1.0, float(i), 0.0, 0.0], 0) for i in range(3)]
+    )
+
+    out = mmr_rerank(spark, sf_dir)
+    assert out.collect() == []
+    assert out.columns == ["pick", "doc_id", "rel_e6", "mmr_e6"]
+    con = duckdb.connect()
+    for t in ("documents", "embeddings"):
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
+        )
+    assert con.execute(_mmr_oracle()).fetchall() == []
